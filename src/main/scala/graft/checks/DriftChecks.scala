@@ -371,67 +371,6 @@ object DriftChecks {
     }
   }
 
-  /** MMD + permutation test (E10) on bounded per-partition feature samples vs
-    * the fitted reference sample — frouros MMD verbatim in semantics
-    * (fit: ml/training.py:131-147; compare: detector_api/app/detector.py:58-60;
-    * 100-permutation test seeded with random_state=31: ml/training.py:136-144).
-    *
-    * Distributed shape: samples are broadcast; `spark.range(parts × (P+1))`
-    * fans one task row per (partition, permutation); permId 0 is the observed
-    * statistic (identity split). Permutation seeds derive from (randomState,
-    * part, permId) so p-values are reproducible at any parallelism.
-    */
-  /** Executor-process-wide cache of pooled kernel matrices, keyed by
-    * (run token, part): all task threads in the JVM share ONE read-only
-    * matrix per partition instead of each building a private copy — the
-    * per-run working set drops from threads×matrix to parts×matrix (cache-
-    * resident), and rebuild cost is paid once per executor. The engine
-    * analog of the reference's per-process singleton detector cache
-    * (detector_api/app/utils.py:4-14).
-    *
-    * The token is a fresh UUID per mmd() call (broadcast ids are NOT unique
-    * across SparkContexts in one JVM — a bench's next session could collide
-    * and silently serve a previous run's matrices); a token change clears
-    * the cache wholesale, and an LRU bound caps residency so a snapshot with
-    * 10^5 partitions cannot OOM the executor. Cached tuple carries the
-    * chunk-invariant observed statistic too. */
-  private object KernelCache {
-    private val MaxEntries = 64
-    private final class Entry(val data: (Array[Float], Int, Double, Double)) {
-      val lastAccess = new java.util.concurrent.atomic.AtomicLong()
-    }
-    private val map = new java.util.concurrent.ConcurrentHashMap[(String, Int), Entry]
-    private val tick = new java.util.concurrent.atomic.AtomicLong()
-    @volatile private var currentToken = ""
-    def get(token: String, part: Int,
-            build: () => (Array[Float], Int, Double, Double)): (Array[Float], Int, Double, Double) = {
-      if (token != currentToken) synchronized {
-        if (token != currentToken) { map.clear(); currentToken = token }
-      }
-      // per-key build under the CHM bin lock (concurrent builds of DIFFERENT
-      // parts proceed in parallel; same part builds once)
-      val e = map.computeIfAbsent((token, part), _ => new Entry(build()))
-      e.lastAccess.set(tick.incrementAndGet())
-      // true LRU eviction on overflow: drop only the LEAST-recently-touched
-      // entries, so with >MaxEntries parts resident the working set of
-      // actively-chunking tasks survives (a wholesale clear here caused
-      // O(n²) rebuild storms at 10^5 partitions). Evicted matrices already
-      // handed to a task remain valid — eviction only unlinks from the map.
-      if (map.size() > MaxEntries) synchronized {
-        while (map.size() > MaxEntries) {
-          var oldestKey: (String, Int) = null
-          var oldestTick = Long.MaxValue
-          map.forEach { (k, v) =>
-            val t = v.lastAccess.get()
-            if (t < oldestTick) { oldestTick = t; oldestKey = k }
-          }
-          if (oldestKey != null) map.remove(oldestKey) else return e.data
-        }
-      }
-      e.data
-    }
-  }
-
   /** EXACT (unsampled) MMD distance between the fitted reference sample and
     * EVERY doc of each partition — the engine's answer to the reference's
     * chunked exact kernel (ml/training.py:145,505-507: `chunk_size=200`
@@ -798,7 +737,7 @@ object DriftChecks {
     * each part's task replays the fused scan's exact bounded selection
     * (maxSample smallest (hash, features) — `DocStatsBuffer.SampleOrd`),
     * builds the pooled kernel matrix once, evaluates all permutations with
-    * the same batched-bitmask kernel sums and the same
+    * the same `Mmd.statsBatchFromMatrix` kernel sums and the same
     * (randomState, part, permId) seeds, and emits ONE scalar row. Driver
     * traffic is O(parts) scalars. Verdicts are IDENTICAL to the
     * collect-broadcast path on the same input and prefilter (spec).
@@ -881,6 +820,18 @@ object DriftChecks {
     }.toSeq
   }
 
+  /** MMD + permutation test (E10) on bounded per-partition feature samples vs
+    * the fitted reference sample — frouros MMD verbatim in semantics
+    * (fit: ml/training.py:131-147; compare: detector_api/app/detector.py:58-60;
+    * 100-permutation test seeded with random_state=31: ml/training.py:136-144).
+    *
+    * Distributed shape: samples are broadcast; each part's permutation ids
+    * 0..P (permId 0 = the observed statistic, identity split) are cut into
+    * chunks of `permsPerTask` that fan out as tasks. Seeds derive from
+    * (randomState, part, permId), and `Mmd.statsBatchFromMatrix` gives a
+    * permutation the same value whichever chunk holds it, so p-values are
+    * reproducible at any parallelism and chunk size.
+    */
   def mmd(spark: SparkSession, runId: String, alpha: Double, ref: RefState,
           samples: Map[Int, Array[Array[Double]]],
           numPermutations: Int = 100, randomState: Long = 31L,
@@ -889,58 +840,48 @@ object DriftChecks {
     val parts = samples.keys.toSeq.sorted
     val bc = spark.sparkContext.broadcast((ref.refSample, ref.sigma, samples))
     val perPart = numPermutations + 1 // permId 0 = observed (identity split)
-    // task chunks: (part, permStart, permEnd). Each task materializes the
-    // pooled kernel matrix ONCE and evaluates its chunk of permutations as
-    // pure reindexed sums — no exp() per permutation. This is the engine's
-    // answer to the reference's chunked kernel + multiprocessing permutation
-    // pool (ml/training.py:145, 528-534): the kernel work is O(pool²) per
-    // task-chunk, permutation work is adds only, and chunks fan out over all
-    // executors via spark.range-style task parallelism.
+    // task chunks: (part, permStart, permEnd) — the engine's answer to the
+    // reference's chunked kernel + multiprocessing permutation pool
+    // (ml/training.py:145, 528-534): the kernel (exp) work is O(pool²) per
+    // part, permutation work is adds only.
     val chunks = for {
       part <- parts
       s <- 0 until perPart by permsPerTask
     } yield (part, s, math.min(s + permsPerTask, perPart))
     // createDataset slices the local Seq into defaultParallelism CONTIGUOUS
-    // ranges — consecutive chunks share a part, so each task rebuilds the
-    // kernel matrix at most once or twice. (A round-robin repartition here
-    // interleaves parts and forces a rebuild every other chunk.)
-    // each task emits one PARTIAL row per (part, chunk): the observed stat
-    // (if permId 0 was in the chunk) plus this chunk's count of perm-stats ≥
-    // observed — the observed statistic is recomputed from the shared kernel
-    // matrix (identity split, cheap) so chunks are self-contained. Driver
-    // traffic is O(chunks), never O(parts × permutations): the shape that
-    // holds when a snapshot has 10^5+ partitions.
-    val runToken = java.util.UUID.randomUUID().toString
+    // ranges — consecutive chunks share a part, so a task builds a part's
+    // kernel matrix once, at the part's first chunk, and drops it when it
+    // moves to the next part; a part split across two tasks is built by both.
+    // No matrix outlives its task. (A round-robin repartition here would
+    // interleave parts and force a rebuild every other chunk.)
+    // Each task emits one PARTIAL row per chunk: the part's observed stat
+    // plus the chunk's count of perm-stats ≥ observed. Driver traffic is
+    // O(chunks), never O(parts × permutations).
     val partials = spark.createDataset(chunks)
       .mapPartitions { it =>
         val (refSample, sigma, prodSamples) = bc.value
+        val m = refSample.length
+        var cur = -1
+        var kMat: Array[Float] = null
+        var nPool = 0
+        var sTotal, obs = 0.0
         it.map { case (part, s, e) =>
-          val m = refSample.length
-          // the chunk-invariant observed statistic is computed once at
-          // matrix-build time and cached with the matrix — recomputing it
-          // per chunk would re-stream the whole O(n²) matrix each time
-          val (kMat, nPool, sTotal, obs) = KernelCache.get(runToken, part, () => {
+          if (part != cur) {
+            kMat = null // let the previous part's matrix go before building
             val pool = refSample ++ prodSamples(part)
-            val k = Mmd.kernelMatrix(pool, sigma)
-            val sT = Mmd.upperTriangleSum(k, pool.length)
-            val ob = Mmd.statsBatchFromMatrix(k, pool.length, m, sT,
-              Array(Array.tabulate(pool.length)(identity)))(0)
-            (k, pool.length, sT, ob)
-          })
-          // batch-of-64 bitmask evaluation: one sequential matrix pass per 64
-          // permutations instead of one random-access pass per permutation —
-          // see Mmd.statsBatchFromMatrix
-          var ge = 0
-          (math.max(s, 1) until e).grouped(64).foreach { grp =>
-            val perms = grp.map { permId =>
-              graft.stats.StatMath.permutation(nPool,
-                // seed mixes part so each partition gets an independent stream
-                (randomState * 1000003L + part) * 0x9E3779B97F4A7C15L + (permId - 1))
-            }.toArray
-            Mmd.statsBatchFromMatrix(kMat, nPool, m, sTotal, perms)
-              .foreach(st => if (st >= obs) ge += 1)
+            nPool = pool.length
+            kMat = Mmd.kernelMatrix(pool, sigma)
+            sTotal = Mmd.upperTriangleSum(kMat, nPool)
+            obs = Mmd.statsBatchFromMatrix(kMat, nPool, m, sTotal,
+              Array(Array.tabulate(nPool)(identity)))(0)
+            cur = part
           }
-          (part, obs, ge)
+          val perms = (math.max(s, 1) until e).map { permId =>
+            graft.stats.StatMath.permutation(nPool,
+              // seed mixes part so each partition gets an independent stream
+              (randomState * 1000003L + part) * 0x9E3779B97F4A7C15L + (permId - 1))
+          }.toArray
+          (part, obs, Mmd.statsBatchFromMatrix(kMat, nPool, m, sTotal, perms).count(_ >= obs))
         }
       }
       .collect()

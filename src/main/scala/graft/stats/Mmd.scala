@@ -10,7 +10,7 @@ package graft.stats
   * window (ml/training.py:252) and compares 10,000-row batches
   * (ml/testing.py:61). At 100 TB scale the *sampling* is distributed (Spark
   * side); this math runs on the bounded per-partition samples, and the
-  * permutation fan-out is distributed over `spark.range(numPermutations)`.
+  * permutation fan-out is distributed as Spark tasks (`DriftChecks.mmd`).
   */
 object Mmd {
 
@@ -118,9 +118,10 @@ object Mmd {
       2.0 * syy / (n.toDouble * (n - 1)) -
       2.0 * sxy / (m.toDouble * n)
 
-  /** Full pooled kernel matrix (float, symmetric, row-major). Computing it
-    * ONCE per task and reindexing per permutation removes the exp() from the
-    * permutation loop — the permutation test then costs additions only. */
+  /** Full pooled kernel matrix (float, symmetric, row-major, unit diagonal).
+    * Built once per part and reindexed per permutation, so the permutation
+    * test costs additions only (`statsBatchFromMatrix`). n² floats: 64 MB at
+    * a 4000-row pool — callers keep it no longer than the part it serves. */
   def kernelMatrix(pool: Array[Array[Double]], sigma: Double): Array[Float] = {
     val n = pool.length
     val k = new Array[Float](n * n)
@@ -141,84 +142,112 @@ object Mmd {
 
   /** Sum of the strict upper triangle of the pooled kernel matrix — a
     * permutation invariant: for ANY split of the pool into (X, Y),
-    * sxx + syy + sxy = this total. Lets the batch evaluator skip the cross
-    * term entirely. One sequential pass. */
+    * sxx + syy + sxy = this total. One sequential pass. Each row tail is
+    * summed on its own first: one running sum over all n²/2 terms rounds
+    * enough to move the MMD distance in its 12th digit at a 4000-row pool,
+    * because the within-side sums are derived from this total by
+    * subtracting nearly equal sums. */
   def upperTriangleSum(k: Array[Float], nPool: Int): Double = {
     var s = 0.0
     var i = 0
     while (i < nPool) {
       val row = i * nPool
+      var r = 0.0
       var j = i + 1
-      while (j < nPool) { s += k(row + j); j += 1 }
+      while (j < nPool) { r += k(row + j); j += 1 }
+      s += r
       i += 1
     }
     s
   }
 
-  /** Evaluate up to 64 permutations in ONE sequential pass over the kernel
-    * matrix using membership bitmasks.
+  /** Permutations whose accumulators share one read of the matrix rows:
+    * 16 × nPool doubles (512 KB at a 4000-row pool) stay cache-resident. */
+  private val PermGroup = 16
+
+  /** MMD distance for each permutation in `perms`, matching `statFromMatrix`.
     *
-    * Why: the naive per-permutation evaluation (`statFromMatrix`) makes one
-    * full random-access pass over the O(n²) matrix PER permutation — at 32
-    * concurrent tasks the working sets exceed L3 and the loop is DRAM-
-    * bandwidth-bound, which caps single-node scaling and would eat executor
-    * memory bandwidth on a real cluster. Here each matrix entry is loaded
-    * once per 64 permutations (sequential, prefetch-friendly) and membership
-    * tests run in registers: bit b of `mx(i)` says whether pool index i lands
-    * in X under permutation b. Cross terms come free via `upperTriangleSum`.
-    * ~64× less memory traffic per permutation → the fan-out is compute-bound
-    * and scales with cores.
+    * Row-sum identity: let A be the smaller side (X when m ≤ nPool − m, else
+    * Y), B the other, r_i = Σ_{j≠i} k_ij, R_A = Σ_{i∈A} r_i and S = `sTotal`.
+    * Then s_AB = R_A − 2·s_AA and s_BB = S − R_A + s_AA, so only s_AA needs
+    * O(n²) work. It is accumulated densely: for every i ∈ A the row tail
+    * k(i, i+1..n) is added into a per-permutation accumulator acc, and
+    * s_AA = Σ_{j∈A} acc(j). Permutations run in groups of `PermGroup`, so each
+    * matrix row is read once per group and its adds are contiguous.
     *
-    * `perms(b)` = the permuted index order (first m entries form X_b).
-    * Returns the MMD distance per permutation, matching `statFromMatrix`. */
+    * Grouping invariance: every sum a permutation's value depends on is taken
+    * in ascending pool-index order, so its value is bit-identical whichever
+    * other permutations share the call (callers split permutation ids into
+    * calls differently and must agree bit for bit).
+    *
+    * `perms(b)` = the permuted index order (first m entries form X_b). */
   def statsBatchFromMatrix(k: Array[Float], nPool: Int, m: Int, sTotal: Double,
                            perms: Array[Array[Int]]): Array[Double] = {
     val nb = perms.length
-    require(nb <= 64, s"batch width $nb > 64")
     val n2 = nPool - m
-    if (m < 2 || n2 < 2) return Array.fill(nb)(0.0)
-    val mx = new Array[Long](nPool)
-    var b = 0
-    while (b < nb) {
-      val p = perms(b)
-      var i = 0
-      while (i < m) { mx(p(i)) |= 1L << b; i += 1 }
-      b += 1
-    }
-    val live = if (nb == 64) -1L else (1L << nb) - 1
-    val sxx = new Array[Double](nb)
-    val syy = new Array[Double](nb)
+    if (nb == 0 || m < 2 || n2 < 2) return Array.fill(nb)(0.0)
+    val aIsX = m <= n2
+    val r = new Array[Double](nPool)
     var i = 0
     while (i < nPool) {
       val row = i * nPool
-      val mi = mx(i)
-      val ni = ~mi & live
-      var j = i + 1
-      while (j < nPool) {
-        val v = k(row + j).toDouble
-        var wx = mi & mx(j)
-        while (wx != 0) {
-          val t = java.lang.Long.numberOfTrailingZeros(wx)
-          sxx(t) += v
-          wx &= wx - 1
-        }
-        var wy = ni & ~mx(j) & live
-        while (wy != 0) {
-          val t = java.lang.Long.numberOfTrailingZeros(wy)
-          syy(t) += v
-          wy &= wy - 1
-        }
-        j += 1
-      }
+      var s = 0.0
+      var j = 0
+      while (j < i) { s += k(row + j); j += 1 }
+      j = i + 1
+      while (j < nPool) { s += k(row + j); j += 1 }
+      r(i) = s
       i += 1
     }
-    Array.tabulate(nb) { t =>
-      val sxy = sTotal - sxx(t) - syy(t)
-      val mmd2 = 2.0 * sxx(t) / (m.toDouble * (m - 1)) +
-        2.0 * syy(t) / (n2.toDouble * (n2 - 1)) -
-        2.0 * sxy / (m.toDouble * n2)
-      math.sqrt(math.max(0.0, mmd2))
+    val out = new Array[Double](nb)
+    val inA = new Array[Int](nPool) // bit t: pool index is in A under group member t
+    val acc = new Array[Double](PermGroup * nPool)
+    var g0 = 0
+    while (g0 < nb) {
+      val g = math.min(PermGroup, nb - g0)
+      java.util.Arrays.fill(inA, 0)
+      java.util.Arrays.fill(acc, 0, g * nPool, 0.0)
+      var t = 0
+      while (t < g) {
+        val p = perms(g0 + t)
+        val bit = 1 << t
+        var q = if (aIsX) 0 else m
+        val qEnd = if (aIsX) m else nPool
+        while (q < qEnd) { inA(p(q)) |= bit; q += 1 }
+        t += 1
+      }
+      i = 0
+      while (i < nPool) {
+        val row = i * nPool
+        var w = inA(i)
+        while (w != 0) {
+          val off = Integer.numberOfTrailingZeros(w) * nPool
+          var j = i + 1
+          while (j < nPool) { acc(off + j) += k(row + j); j += 1 }
+          w &= w - 1
+        }
+        i += 1
+      }
+      t = 0
+      while (t < g) {
+        val off = t * nPool
+        var sAA = 0.0
+        var rA = 0.0
+        var j = 0
+        while (j < nPool) {
+          if ((inA(j) >>> t & 1) != 0) { sAA += acc(off + j); rA += r(j) }
+          j += 1
+        }
+        val sAB = rA - 2.0 * sAA
+        val sBB = sTotal - rA + sAA
+        val (sxx, syy) = if (aIsX) (sAA, sBB) else (sBB, sAA)
+        val mmd2 = mmd2FromSums(sxx, syy, sAB, m, n2)
+        out(g0 + t) = math.sqrt(math.max(0.0, mmd2))
+        t += 1
+      }
+      g0 += g
     }
+    out
   }
 
   /** MMD distance from a precomputed pooled kernel matrix and an index

@@ -97,7 +97,7 @@ class TreeMergeRunSpec extends AnyFunSuite {
 /** The fully-distributed MMD path must produce verdicts IDENTICAL to the
   * collect-broadcast path: same bounded sample selection
   * (DocStatsBuffer.SampleOrd), same (randomState, part, permId) seeds, same
-  * batched-bitmask estimator — only the execution shape differs (samples
+  * `Mmd.statsBatchFromMatrix` estimator — only the execution shape differs (samples
   * never transit the driver). */
 class MmdDistributedSpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestBase.spark
@@ -161,5 +161,48 @@ class VerdictEchoSpec extends AnyFunSuite {
     val res2 = graft.engine.ValidationRun.run(docs, media, ref,
       graft.engine.RunConfig(runId = "noecho", maxSample = 50))
     res2.verdicts.collect().foreach(v => assert(v.input_values.isEmpty))
+  }
+}
+
+/** DriftChecks.mmd cuts each part's permutations into `permsPerTask` chunks;
+  * every task builds its own kernel matrix for the parts it reaches, so a
+  * part whose chunks land in two tasks is evaluated twice over. The verdicts
+  * must not depend on the chunk size and must equal the permutation test
+  * recomputed on the driver straight from the stats layer. */
+class MmdChunkSpec extends AnyFunSuite {
+  lazy val spark = graft.SparkTestBase.spark
+  import spark.implicits._
+
+  test("mmd verdicts are the same for every permsPerTask and match a driver recomputation") {
+    val docs = DocsGen.docs(spark, 1800, DocsGen.goldenScenario)
+    val ref = Fit.fit(docs.filter($"part" === 0), snapshotId = 3L, maxSample = 60)
+    val samples = PartStats.computeFused(docs, maxSample = 40,
+      graft.sketch.DocStatsAgg.ModeSample)._2
+    // createDataset cuts the chunk list into defaultParallelism contiguous
+    // slices; at 7 perms per task some slice boundary must split a part
+    val slices = spark.sparkContext.defaultParallelism
+    val chunksPerPart = (100 + 1 + 6) / 7 // permIds 0..100 in chunks of 7
+    val nChunks = samples.size * chunksPerPart
+    assert((1 until slices).exists(i => (i.toLong * nChunks / slices) % chunksPerPart != 0))
+    def run(permsPerTask: Int) =
+      DriftChecks.mmd(spark, "c", 0.01, ref, samples, permsPerTask = permsPerTask)
+        .map(v => (v.part, v.distance, v.p_value, v.is_drift))
+    val base = run(64)
+    assert(base.size == samples.size && base.exists(_._4) && base.exists(!_._4))
+    assert(run(7) == base && run(101) == base)
+    val m = ref.refSample.length
+    base.foreach { case (part, dist, p, _) =>
+      val pool = ref.refSample ++ samples(part)
+      val k = graft.stats.Mmd.kernelMatrix(pool, ref.sigma)
+      val sT = graft.stats.Mmd.upperTriangleSum(k, pool.length)
+      val obs = graft.stats.Mmd.statsBatchFromMatrix(k, pool.length, m, sT,
+        Array(Array.tabulate(pool.length)(identity)))(0)
+      val stats = (1 to 100).grouped(64).flatMap { grp =>
+        graft.stats.Mmd.statsBatchFromMatrix(k, pool.length, m, sT, grp.map(id =>
+          graft.stats.StatMath.permutation(pool.length,
+            (31L * 1000003L + part) * 0x9E3779B97F4A7C15L + (id - 1))).toArray)
+      }.toSeq
+      assert(dist == obs && p == stats.count(_ >= obs) / 100.0, s"part $part")
+    }
   }
 }

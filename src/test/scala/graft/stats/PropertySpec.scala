@@ -73,24 +73,28 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("batched bitmask permutation evaluation matches per-permutation path") {
-    (1 to 10).foreach { round =>
-      val x = vecs(20, 3); val y = vecs(25, 3)
-      val pool = x ++ y
+  test("permutation batches match per-permutation path, whatever the grouping") {
+    // m < nPool − m (X is the smaller side), m > nPool − m (Y is), and a tie
+    for ((mx, my) <- Seq((20, 25), (31, 14), (18, 18)); round <- 1 to 4) {
+      val pool = vecs(mx, 3) ++ vecs(my, 3)
       val n = pool.length
       val k = Mmd.kernelMatrix(pool, 1.0)
       val sTotal = Mmd.upperTriangleSum(k, n)
-      // mix of identity + seeded permutations, batch width up to 64
-      val perms = Array.tabulate(math.min(64, 3 + round * 6)) { b =>
+      val perms = Array.tabulate(64) { b =>
         if (b == 0) Array.tabulate(n)(identity)
-        else StatMath.permutation(n, round * 1000L + b)
+        else StatMath.permutation(n, round * 1000L + mx * 100L + b)
       }
-      val batch = Mmd.statsBatchFromMatrix(k, n, x.length, sTotal, perms)
+      val batch = Mmd.statsBatchFromMatrix(k, n, mx, sTotal, perms)
       perms.zipWithIndex.foreach { case (p, b) =>
-        val single = Mmd.statFromMatrix(k, n, x.length, p)
+        val single = Mmd.statFromMatrix(k, n, mx, p)
         assert(math.abs(batch(b) - single) < 1e-9,
-          s"round=$round b=$b ${batch(b)} vs $single")
+          s"m=$mx round=$round b=$b ${batch(b)} vs $single")
       }
+      val split = Mmd.statsBatchFromMatrix(k, n, mx, sTotal, perms.take(63)) ++
+        Mmd.statsBatchFromMatrix(k, n, mx, sTotal, perms.drop(63))
+      val oneByOne = perms.map(p => Mmd.statsBatchFromMatrix(k, n, mx, sTotal, Array(p))(0))
+      assert(split.sameElements(batch) && oneByOne.sameElements(batch),
+        s"m=$mx round=$round: grouping changed a value")
     }
   }
 
